@@ -34,9 +34,6 @@ final class Req(val id: Int, val key: String, val kind: String, val block: Int) 
   * entry point; it builds, generates inputs and checks outputs. */
 object PerfMain {
   private val mb = 1024.0 * 1024.0
-  /** Cores taken by other machines (steal) and processes above which a
-    * block counts as contended. */
-  val MaxContention = 0.3
 
   def main(argv: Array[String]): Unit = {
     val a = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -53,6 +50,13 @@ object PerfMain {
     val spark0 = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", s"$out/warehouse")
       .config("spark.local.dir", s"$out/spark-local")
+      // Spark's status store keeps the last 1000 jobs, stages and SQL
+      // executions by default, so the live heap would grow with the
+      // number of requests a run fits in; a small cap that warm-up
+      // already fills keeps heap_live_mb independent of it.
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.sql.ui.retainedExecutions", "100")
       .getOrCreate()
     spark0.sparkContext.setLogLevel("ERROR")
     CkptGc.quietUnpersistWarnings()
@@ -82,9 +86,12 @@ object PerfMain {
     val runner = new Runner(spark)
     val w = workload match {
       case "lake_ingest" => new LakeWorkload(runner, spark, data, lake.get, seed, out)
-      case _ => new RegistryWorkload(runner, spark, data, a("pool").split(',').toSeq, seed)
+      case _ => new RegistryWorkload(runner, spark, data, a("pool").split(',').toSeq, seed,
+        s"$out/check")
     }
-    val keysWarmS = timed(w.warm())
+    // Warm-up, then a full GC so the ContextCleaner drops warm-up
+    // shuffles and broadcasts before the first timed block, not in it.
+    val keysWarmS = timed { w.warm(); System.gc(); Thread.sleep(500) }
     val setupS = sessionS + medianRound + keysWarmS
     val epochOffsetMs = System.currentTimeMillis() - System.nanoTime() / 1e6
     val os = ManagementFactory.getOperatingSystemMXBean
@@ -94,18 +101,15 @@ object PerfMain {
     val cpu0 = os.getProcessCpuTime
     val gc0 = gcMs
     val host0 = Contention.sample()
-    // Blocks run until `seconds` have passed and two of them ran while
-    // other machines and processes took under MaxContention cores: a
-    // contended block is re-timed when another block still fits in
-    // 2.5 × `seconds`. The metrics come from the uncontended blocks when
-    // there are any.
+    // Blocks run while the next one would end nearer to `seconds` than
+    // the last one did. Each block records the cores other machines
+    // (steal) and processes took while it ran.
     val loop0 = System.nanoTime()
     def elapsed = (System.nanoTime() - loop0) / 1e9
     val blocks = ArrayBuffer.empty[(Int, Double, Double)]
-    def clean = blocks.count(_._3 < MaxContention)
+    def avgS = blocks.map(_._2).sum / math.max(1, blocks.size)
     var b = 0
-    def fits = elapsed + blocks.map(_._2).sum / math.max(1, blocks.size) <= 2.5 * seconds
-    while (b == 0 || elapsed < seconds || (clean < 2 && fits)) {
+    while (b == 0 || elapsed + avgS / 2 < seconds) {
       val c0 = Contention.sample()
       val t0 = System.nanoTime()
       runner.block = b
@@ -119,19 +123,28 @@ object PerfMain {
     val gcS = (gcMs - gc0) / 1e3
     val host = Contention.since(host0, loopS)
 
-    // Live heap after a forced full GC, plus block-manager storage. The
-    // pause lets the ContextCleaner release the shuffles and broadcasts
-    // the first collection made unreachable.
-    System.gc(); Thread.sleep(1000); System.gc()
-    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb
+    // Live heap after forced full GCs, plus block-manager storage. The
+    // pauses let the ContextCleaner release the shuffles and broadcasts
+    // a collection made unreachable; collect until the heap settles.
+    def usedMb = { System.gc(); ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb }
+    var heapMb = usedMb
+    var settled = false
+    var gcs = 1
+    while (!settled && gcs < 6) {
+      Thread.sleep(400)
+      val next = usedMb
+      settled = math.abs(next - heapMb) < 1.0
+      heapMb = next
+      gcs += 1
+    }
     val mem = spark.sparkContext.getExecutorMemoryStatus.values
     val storageMb = mem.map { case (max, rem) => max - rem }.sum / mb
     val storageMaxMb = mem.map(_._1).sum / mb
     val pinnedMb = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / mb
 
-    // Outputs for the oracle check, outside the clock.
-    val checked = w.writeChecks(s"$out/check")
+    // The keys whose warm-up outputs the oracle check compares.
+    val checked = w.checked
     Files.write(Paths.get(s"$out/oracle_sql.json"), checked.flatMap { k =>
       SparkEntry.oracleSql.get(k).map(v => s"${Json.q(k)}:${Json.q(v)}")
     }.mkString("{", ",", "}").getBytes(UTF_8))
@@ -148,8 +161,7 @@ object PerfMain {
       .num("jvm_cpu_s", cpuS).num("jvm_gc_s", gcS).num("cpus", cpus.toDouble)
       .obj("contention", host).raw("checked", Json.strs(checked))
       .raw("blocks", blocks.map { case (i, wall, c) =>
-        new Json().num("block", i).num("wall_s", wall).num("contention_cores", c)
-          .bool("clean", c < MaxContention).render
+        new Json().num("block", i).num("wall_s", wall).num("contention_cores", c).render
       }.mkString("[", ",", "]"))
       .raw("inputs", w.inputs.render)
       .raw("requests", reqs.map { r =>
@@ -208,6 +220,8 @@ object PerfMain {
 final class Runner(val spark: SparkSession) {
   val reqs = ArrayBuffer.empty[Req]
   var block = 0
+  /** Set during warm-up: requests run without their output checks. */
+  var warming = false
   private var nextId = 0
   private val sc = spark.sparkContext
 
@@ -228,7 +242,7 @@ final class Runner(val spark: SparkSession) {
     r.phases += (("ckptgc.sweep", r.tEnd, r.tDone))
     r.swept = (mid -- CkptGc.snapshot(spark)).size
     sc.setLocalProperty(Recorder.ReqProp, null)
-    if (r.error == null)
+    if (r.error == null && !warming)
       try check() catch { case NonFatal(e) => r.error = s"check: $e".take(300) }
     if (r.error != null) System.err.println(s"[perfbench] $key failed: ${r.error}")
     reqs += r
@@ -265,27 +279,35 @@ trait Workload {
   def warm(): Unit = ()
   def block(b: Int): Unit
   def inputs: Json
-  def writeChecks(dir: String): Seq[String]
+  /** The keys the run sent whose outputs warm-up wrote under
+    * `<out>/check` for the oracle check. */
+  def checked: Seq[String]
   def extra(j: Json): Unit = ()
 }
 
 /** Closed loop over a fixed key pool: block b sends every key once, in
   * an order drawn from the seed. */
 final class RegistryWorkload(r: Runner, spark: SparkSession, data: String,
-                             pool: Seq[String], seed: Long) extends Workload {
+                             pool: Seq[String], seed: Long, checkDir: String) extends Workload {
   private val sent = scala.collection.mutable.LinkedHashSet.empty[String]
+  private var written = Seq.empty[String]
   pool.foreach(k => require(SparkEntry.queries.contains(k), s"unknown key $k"))
 
-  /** Two untimed passes over the pool, so timed requests measure warm
+  /** Six untimed passes over the pool, so timed requests measure warm
     * plans (generated code compiled, hot paths JIT-compiled) rather than
-    * first use; one pass leaves later blocks measurably faster than the
-    * first. */
-  override def warm(): Unit = (1 to 2).foreach(_ => pool.foreach { k =>
-    val before = CkptGc.snapshot(spark)
-    try SparkEntry.queries(k)(spark, data).write.format("noop").mode("overwrite").save()
-    catch { case NonFatal(e) => System.err.println(s"[perfbench] warm-up $k failed: $e") }
-    finally CkptGc.sweep(spark, before)
-  })
+    * first use: after three, JIT compiler threads still take over a core
+    * during the timed blocks, and on a shared host that contention moves
+    * latency from run to run. The first pass writes the outputs the
+    * oracle check compares. */
+  override def warm(): Unit = {
+    written = r.writeChecks(pool, data, checkDir)
+    (2 to 6).foreach(_ => pool.foreach { k =>
+      val before = CkptGc.snapshot(spark)
+      try SparkEntry.queries(k)(spark, data).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(e) => System.err.println(s"[perfbench] warm-up $k failed: $e") }
+      finally CkptGc.sweep(spark, before)
+    })
+  }
 
   def block(b: Int): Unit = {
     val order = new scala.util.Random(seed * 1000003L + b).shuffle(pool)
@@ -300,7 +322,7 @@ final class RegistryWorkload(r: Runner, spark: SparkSession, data: String,
     .num("repeats", r.reqs.size - sent.size)
     .str("first_keys", r.reqs.take(8).map(_.key).mkString(","))
 
-  def writeChecks(dir: String): Seq[String] = r.writeChecks(sent.toSeq, data, dir)
+  def checked: Seq[String] = written.filter(sent)
 }
 
 /** CSV lake → gold parquet → catalog table maintenance → audit keys.
@@ -324,11 +346,22 @@ final class LakeWorkload(r: Runner, spark: SparkSession, data: String,
     "q_jsonl_roundtrip", "q_compaction_audit", "q_schema_evolution",
     "q_orphan_audit", "q_storage_profile")
   private val sentAudits = scala.collection.mutable.LinkedHashSet.empty[String]
+  private var written = Seq.empty[String]
   private val bpub = ArrayBuffer.empty[Double]
   private val filesLive = ArrayBuffer.empty[Long]
   private val ingestRate = ArrayBuffer.empty[Double]
 
   private def ticks = GoldIngest.readDir(spark, s"$lake/gold")
+
+  /** One untimed pass over the whole sequence on a table of its own, so
+    * the timed block runs warm: a cold block takes twice as long, and its
+    * single samples of each operation spread by 20% from run to run. */
+  override def warm(): Unit = {
+    r.warming = true
+    block(-1)
+    r.warming = false
+    r.reqs.clear(); bpub.clear(); filesLive.clear(); ingestRate.clear()
+  }
   private def bidCents(df: DataFrame): (Long, Long) = {
     val row = df.agg(count(lit(1)), sum(round(col("bid") * 100).cast("long"))).head()
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
@@ -338,8 +371,9 @@ final class LakeWorkload(r: Runner, spark: SparkSession, data: String,
 
   def block(b: Int): Unit = {
     val rnd = new scala.util.Random(seed * 7919L + b)
-    val gold = s"$out/lake_gold_$b"
-    val table = s"bench_gold_$b"
+    val tag = if (b < 0) "warm" else b.toString
+    val gold = s"$out/lake_gold_$tag"
+    val table = s"bench_gold_$tag"
     val days = ticks.select(to_date(col("ts")).as("d")).distinct().as[java.sql.Date]
       .collect().map(_.toString).sorted.toSeq
     val firstOfYear = days.groupBy(_.take(4)).values.map(_.min).toSet
@@ -446,7 +480,9 @@ final class LakeWorkload(r: Runner, spark: SparkSession, data: String,
     bpub += disk.toDouble / userBytes
     filesLive += files.count(_.toString.endsWith(".parquet"))
 
-    rnd.shuffle(audits).foreach { k =>
+    // warm-up writes the audit outputs the oracle check compares
+    if (r.warming) written = r.writeChecks(rnd.shuffle(audits), data, s"$out/check")
+    else rnd.shuffle(audits).foreach { k =>
       r.registry(k, data); sentAudits += k
     }
     spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -461,7 +497,7 @@ final class LakeWorkload(r: Runner, spark: SparkSession, data: String,
     .num("dup_share", man.getProperty("dup_share").toDouble)
     .num("ooo_share", man.getProperty("ooo_share").toDouble)
 
-  def writeChecks(dir: String): Seq[String] = r.writeChecks(sentAudits.toSeq, data, dir)
+  def checked: Seq[String] = written.filter(sentAudits)
 
   override def extra(j: Json): Unit = {
     j.num("bytes_per_user_byte", bpub.sum / math.max(1, bpub.size))
